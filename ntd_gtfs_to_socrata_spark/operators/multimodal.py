@@ -1,9 +1,14 @@
 """Multimodal column handling (north-star extension).
 
 Media (image/audio/video) are opaque ``binary`` columns plus typed
-metadata, the lakehouse-native layout for multimodal training data. The
-Spark-side plumbing — schemas, Arrow-batched ``mapInPandas`` UDFs, batch
-shapes — is real and tested. Codec status: BMP pixel decode, PNG pixel
+metadata, the lakehouse-native layout for multimodal training data.
+Plumbing: one adapter, ``_blob_udf(per_blob, schema)``, builds every
+decoder. A per-blob function ``(doc_id, blob) -> rows`` and a DDL schema
+go in; an Arrow-batched ``mapInPandas`` over ``(doc_id, payload)`` comes
+out. Bad blobs come out as data (an ``ok=False`` row with null stats, or
+no rows for fan-out formats), never as a failed task.
+
+Codec status: BMP pixel decode, PNG pixel
 decode (stdlib zlib inflate + real scanline unfiltering), baseline JPEG
 decode (full entropy decode: canonical Huffman, byte unstuffing, RSTn,
 run-length AC, dezigzag, dequantize, float IDCT, YCbCr->RGB), NN resize,
@@ -34,6 +39,42 @@ DECODE_SCHEMA = (
 )
 
 
+def _blob_udf(per_blob, schema: str):
+    """The one blob adapter: ``per_blob(doc_id, blob)`` plus a flat DDL
+    ``schema`` in, a ``DataFrame -> DataFrame`` decoder out.
+
+    ``per_blob`` receives the payload as ``bytes`` (a null payload arrives
+    as ``b""``) and returns a list of row tuples in schema order, or
+    ``None`` when the blob does not decode. ``None`` becomes the schema's
+    errors-as-data result: one row of null stats with ``ok=False`` when
+    the schema ends in ``ok``, else no rows. Each task decodes its
+    partition's blobs in Arrow batches — no driver-side loop, no
+    per-row Spark overhead. The returned function's ``batch`` attribute
+    is the raw ``mapInPandas`` generator, so a decoder can be driven on
+    pandas frames without a Spark session."""
+    columns = [field.split()[0] for field in schema.split(",")]
+    bad_row = (None,) * (len(columns) - 2) + (False,) if columns[-1] == "ok" else None
+
+    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                out = per_blob(doc_id, bytes(payload or b""))
+                if out is not None:
+                    rows.extend(out)
+                elif bad_row is not None:
+                    rows.append((doc_id, *bad_row))
+            yield pd.DataFrame(rows, columns=columns)
+
+    def decode(with_payload: DataFrame) -> DataFrame:
+        return with_payload.select("doc_id", "payload").mapInPandas(
+            batch, schema=schema
+        )
+
+    decode.batch = batch
+    return decode
+
+
 def attach_payload(docs: DataFrame) -> DataFrame:
     """Materialize a binary payload column + metadata struct from text
     (stand-in for `spark.read.format('binaryFile')` on a media lake)."""
@@ -48,7 +89,7 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fake_decode(doc_id, blob: bytes):
     """STUB DECODER (deterministic fake).
 
     Real implementation would be e.g.::
@@ -61,27 +102,16 @@ def fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     iteration, schema contract, per-partition execution) is the production
     plumbing.
     """
-    for pdf in batches:
-        n_bytes = pdf["payload"].map(len)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n_bytes,
-                "format": n_bytes.map(lambda n: "png" if n % 2 == 0 else "jpeg"),
-                "width": n_bytes % 640 + 1,
-                "height": (n_bytes // 640) % 480 + 1,
-                "ok": True,
-            }
-        )
+    n = len(blob)
+    fmt = "png" if n % 2 == 0 else "jpeg"
+    return [(doc_id, n, fmt, n % 640 + 1, (n // 640) % 480 + 1, True)]
 
 
 def decode_media(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched decode over partitions — the pattern that scales:
     each task decodes its partition's blobs in pandas batches, no
     driver-side loop, no per-row Python overhead."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        fake_decode_batch, schema=DECODE_SCHEMA
-    )
+    return _blob_udf(_fake_decode, DECODE_SCHEMA)(with_payload)
 
 
 AUDIO_WINDOW_SCHEMA = (
@@ -91,7 +121,7 @@ AUDIO_WINDOW_SCHEMA = (
 _AUDIO_WIN = 100  # samples per analysis window
 
 
-def audio_window_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _audio_windows(doc_id, blob: bytes):
     """STUB AUDIO DECODER + real windowed feature extraction.
 
     A real implementation decodes the container first (e.g.
@@ -104,32 +134,25 @@ def audio_window_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     orders."""
     import numpy as np
 
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in ("doc_id", "window_no", "n_samples", "sum_sq", "peak")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            samples = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            for w in range(0, max(len(samples), 1), _AUDIO_WIN):
-                win = samples[w : w + _AUDIO_WIN]
-                out["doc_id"].append(doc_id)
-                out["window_no"].append(w // _AUDIO_WIN)
-                out["n_samples"].append(len(win))
-                out["sum_sq"].append(int((win * win).sum()))
-                out["peak"].append(int(win.max()) if len(win) else 0)
-        yield pd.DataFrame(out)
+    samples = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
+    rows = []
+    for w in range(0, max(len(samples), 1), _AUDIO_WIN):
+        win = samples[w : w + _AUDIO_WIN]
+        peak = int(win.max()) if len(win) else 0
+        rows.append((doc_id, w // _AUDIO_WIN, len(win), int((win * win).sum()), peak))
+    return rows
 
 
 def audio_window_stats(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched windowed audio features (stub codec, real plumbing):
     one output row per 100-sample analysis window per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        audio_window_batch, schema=AUDIO_WINDOW_SCHEMA
-    )
+    return _blob_udf(_audio_windows, AUDIO_WINDOW_SCHEMA)(with_payload)
 
 
 PHASH_SCHEMA = "doc_id long, b0 int, b1 int, b2 int, b3 int"
 
 
-def phash_band_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _phash_band(doc_id, blob: bytes):
     """STUB PERCEPTUAL HASH (blockhash shape) + real Arrow plumbing.
 
     A real pipeline computes pHash/blockhash on the DECODED grayscale
@@ -143,34 +166,26 @@ def phash_band_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     (correct for empty blocks when n < 64, unlike reduceat)."""
     import numpy as np
 
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "b0", "b1", "b2", "b3")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            n = len(arr)
-            bands = [0, 0, 0, 0]
-            if n:
-                cs = np.concatenate(([0], np.cumsum(arr)))
-                total = int(cs[-1])
-                lo = (np.arange(64) * n) // 64
-                hi = ((np.arange(64) + 1) * n) // 64
-                bits = (64 * (cs[hi] - cs[lo])) > total
-                for j in range(4):
-                    band = 0
-                    for k in range(16):
-                        band |= int(bits[16 * j + k]) << k
-                    bands[j] = band
-            out["doc_id"].append(doc_id)
-            for j in range(4):
-                out[f"b{j}"].append(bands[j])
-        yield pd.DataFrame(out)
+    arr = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
+    n = len(arr)
+    bands = [0, 0, 0, 0]
+    if n:
+        cs = np.concatenate(([0], np.cumsum(arr)))
+        total = int(cs[-1])
+        lo = (np.arange(64) * n) // 64
+        hi = ((np.arange(64) + 1) * n) // 64
+        bits = (64 * (cs[hi] - cs[lo])) > total
+        for j in range(4):
+            band = 0
+            for k in range(16):
+                band |= int(bits[16 * j + k]) << k
+            bands[j] = band
+    return [(doc_id, *bands)]
 
 
 def phash_bands(with_payload: DataFrame) -> DataFrame:
     """Per-blob 64-bit perceptual hash as four 16-bit bands, Arrow-batched."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        phash_band_batch, schema=PHASH_SCHEMA
-    )
+    return _blob_udf(_phash_band, PHASH_SCHEMA)(with_payload)
 
 
 FRAME_INTENSITY_SCHEMA = "doc_id long, frame_no int, intensity long"
@@ -178,31 +193,25 @@ FRAME_INTENSITY_SCHEMA = "doc_id long, frame_no int, intensity long"
 _FRAME_BYTES = 100  # bytes per (stub) frame
 
 
-def frame_intensity_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _frame_intensity(doc_id, blob: bytes):
     """STUB FRAME DECODER + real per-frame reduction: a real pipeline
     decodes frames and takes mean luma; the stub reads each 100-byte
     payload slice as the frame and sums its bytes (integer => bit-exact
-    across engines). Same cumulative-sum slicing as ``phash_band_batch``."""
+    across engines). Same cumulative-sum slicing as ``_phash_band``."""
     import numpy as np
 
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "frame_no", "intensity")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            # empty payload => zero frames, matching the oracle's
-            # ceil(len/100) frame count (0 when len = 0) — see ADVICE r6
-            for i in range(0, len(arr), _FRAME_BYTES):
-                out["doc_id"].append(doc_id)
-                out["frame_no"].append(i // _FRAME_BYTES)
-                out["intensity"].append(int(arr[i : i + _FRAME_BYTES].sum()))
-        yield pd.DataFrame(out)
+    arr = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
+    # empty payload => zero frames, matching the oracle's
+    # ceil(len/100) frame count (0 when len = 0) — see ADVICE r6
+    return [
+        (doc_id, i // _FRAME_BYTES, int(arr[i : i + _FRAME_BYTES].sum()))
+        for i in range(0, len(arr), _FRAME_BYTES)
+    ]
 
 
 def frame_intensities(with_payload: DataFrame) -> DataFrame:
     """Per-frame intensity rows, Arrow-batched."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        frame_intensity_batch, schema=FRAME_INTENSITY_SCHEMA
-    )
+    return _blob_udf(_frame_intensity, FRAME_INTENSITY_SCHEMA)(with_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -338,38 +347,19 @@ def parse_header(b) -> tuple:
     return ("unknown", None, None, None, None, False)
 
 
-def parse_header_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched header parse — REAL parsing of real container bytes
-    (pure Python, no codec library); contrast with fake_decode_batch,
-    which stubs pixel decode."""
-    for pdf in batches:
-        parsed = [parse_header(p) for p in pdf["payload"]]
-        out = pd.DataFrame(
-            parsed,
-            columns=["format", "width", "height", "bit_depth", "channels", "ok"],
-        )
-        out.insert(0, "doc_id", pdf["doc_id"].values)
-        out["n_bytes"] = pdf["payload"].map(len).values
-        yield out[
-            [
-                "doc_id",
-                "format",
-                "width",
-                "height",
-                "bit_depth",
-                "channels",
-                "n_bytes",
-                "ok",
-            ]
-        ]
+def _header_row(doc_id, blob: bytes):
+    """Header parse of one blob — REAL parsing of real container bytes
+    (pure Python, no codec library); contrast with _fake_decode, which
+    stubs pixel decode. Never ``None``: an unparseable blob is already
+    an ok=False row from ``parse_header``."""
+    fmt, w, h, depth, channels, ok = parse_header(blob)
+    return [(doc_id, fmt, w, h, depth, channels, len(blob), ok)]
 
 
 def parse_image_headers(with_payload: DataFrame) -> DataFrame:
     """Header metadata for every blob via mapInPandas — the ingest-time
     scan that catalogs a media lake without decoding a single pixel."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        parse_header_batch, schema=HEADER_SCHEMA
-    )
+    return _blob_udf(_header_row, HEADER_SCHEMA)(with_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -477,68 +467,46 @@ def _parse_bmp(b: bytes):
     return w, h, rows.astype(np.int64)
 
 
-def bmp_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _rgb_sums(doc_id, parsed, rgb: tuple):
+    """One (w, h, sum_r, sum_g, sum_b, ok) row from a parsed ``(w, h,
+    pixels)`` image, reading R, G and B from the channel indices ``rgb``;
+    ``None`` (the errors-as-data row) when the parse failed."""
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    return [(doc_id, w, h, *(int(img[..., c].sum()) for c in rgb), True)]
+
+
+def _bmp_stats(doc_id, blob: bytes):
     """REAL PIXEL DECODE (no stub, no codec): per blob, parse the BMP
     headers, slice the padded BGR rows, and reduce to integer per-channel
     sums — exact on any engine. Malformed payloads return ok=False with
     null stats (errors as data, the S4 discipline)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img[..., 2].sum()),  # BMP stores BGR: R is byte 2
-                    int(img[..., 1].sum()),
-                    int(img[..., 0].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "ok"],
-        )
+    return _rgb_sums(doc_id, _parse_bmp(blob), rgb=(2, 1, 0))  # BMP stores BGR
 
 
 def decode_bmp(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real BMP pixel decode: dims + exact channel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_decode_batch, schema=BMP_DECODE_SCHEMA
-    )
+    return _blob_udf(_bmp_stats, BMP_DECODE_SCHEMA)(with_payload)
 
 
-def bmp_row_intensity_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _bmp_row_intensity(doc_id, blob: bytes):
     """Per-IMAGE-row pixel intensity (sum of the row's BGR bytes) from
     real decoded pixels — row y=0 is the TOP image row, so the bottom-up
     file layout is genuinely exercised (a decoder that forgets the flip
     hash-mismatches the oracle)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                continue
-            _, h, img = parsed
-            row_sums = img.sum(axis=(1, 2))
-            out.extend((doc_id, y, int(row_sums[y])) for y in range(h))
-        yield pd.DataFrame(out, columns=["doc_id", "y", "intensity"])
+    parsed = _parse_bmp(blob)
+    if parsed is None:
+        return None
+    _, h, img = parsed
+    row_sums = img.sum(axis=(1, 2))
+    return [(doc_id, y, int(row_sums[y])) for y in range(h)]
 
 
 def bmp_row_intensities(with_payload: DataFrame) -> DataFrame:
     """One row per image row per blob, Arrow-batched — the fan-out stage
     scene-cut detection consumes."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_row_intensity_batch, schema=BMP_ROW_SCHEMA
-    )
+    return _blob_udf(_bmp_row_intensity, BMP_ROW_SCHEMA)(with_payload)
 
 
 # Fixed thumbnail geometry: sources span 1..8 x 1..6, so 4x3 exercises
@@ -548,7 +516,7 @@ RESIZE_H = 3
 BMP_RESIZE_SCHEMA = "doc_id long, x long, y long, r long, g long, b long"
 
 
-def bmp_resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _bmp_thumbnail(doc_id, blob: bytes):
     """REAL nearest-neighbor resize over real decoded pixels: each output
     cell (x, y) of the fixed RESIZE_W x RESIZE_H thumbnail reads source
     pixel (floor(x*w/W), floor(y*h/H)) in image order — the standard NN
@@ -558,21 +526,19 @@ def bmp_resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yield no rows (errors-as-data handled upstream by decode_bmp)."""
     import numpy as np
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                continue
-            w, h, img = parsed
-            xs = (np.arange(RESIZE_W) * w) // RESIZE_W
-            ys = (np.arange(RESIZE_H) * h) // RESIZE_H
-            small = img[np.ix_(ys, xs)]  # (H, W, 3) BGR, image order
-            for y in range(RESIZE_H):
-                for x in range(RESIZE_W):
-                    bb, gg, rr = small[y, x]
-                    out.append((doc_id, x, y, int(rr), int(gg), int(bb)))
-        yield pd.DataFrame(out, columns=["doc_id", "x", "y", "r", "g", "b"])
+    parsed = _parse_bmp(blob)
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    xs = (np.arange(RESIZE_W) * w) // RESIZE_W
+    ys = (np.arange(RESIZE_H) * h) // RESIZE_H
+    small = img[np.ix_(ys, xs)]  # (H, W, 3) BGR, image order
+    rows = []
+    for y in range(RESIZE_H):
+        for x in range(RESIZE_W):
+            bb, gg, rr = small[y, x]
+            rows.append((doc_id, x, y, int(rr), int(gg), int(bb)))
+    return rows
 
 
 def resize_bmp(with_payload: DataFrame) -> DataFrame:
@@ -580,9 +546,7 @@ def resize_bmp(with_payload: DataFrame) -> DataFrame:
     (W*H rows/image, bounded — the fan-out a vision-encoder preprocessor
     feeds). Decode + resample stay in one UDF pass so pixels never cross
     the wire at native resolution."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_resize_batch, schema=BMP_RESIZE_SCHEMA
-    )
+    return _blob_udf(_bmp_thumbnail, BMP_RESIZE_SCHEMA)(with_payload)
 
 
 # --- REAL compressed-format decode: PNG (stored-deflate construction,
@@ -784,41 +748,17 @@ def _parse_png(b: bytes):
     return w, h, px
 
 
-def png_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_stats(doc_id, blob: bytes):
     """REAL COMPRESSED-FORMAT PIXEL DECODE: chunk walk with CRC checks,
     stdlib zlib inflate, real scanline unfiltering — reduced to exact
     integer per-channel sums. Malformed payloads return ok=False with
     null stats (errors as data, the S4 discipline)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_png(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img[..., 0].sum()),  # PNG is RGB order
-                    int(img[..., 1].sum()),
-                    int(img[..., 2].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "ok"],
-        )
+    return _rgb_sums(doc_id, _parse_png(blob), rgb=(0, 1, 2))  # PNG is RGB order
 
 
 def decode_png(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real PNG decode: dims + exact channel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        png_decode_batch, schema=PNG_DECODE_SCHEMA
-    )
+    return _blob_udf(_png_stats, PNG_DECODE_SCHEMA)(with_payload)
 
 
 # --- REAL audio-container decode: WAV (RIFF walk + PCM16 LE samples) -----
@@ -909,48 +849,34 @@ def _parse_wav(b: bytes):
     return np.frombuffer(data, dtype="<i2").astype(np.int64)
 
 
-def wav_window_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _wav_windows(doc_id, blob: bytes):
     """REAL AUDIO DECODE + windowed feature extraction: RIFF chunk walk,
     PCM16 LE sample decode, then per-window sum-of-squares / peak /
     trough — the RMS/VAD/loudness reduction, in exact integers.
     Malformed payloads yield no rows."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            samples = _parse_wav(bytes(payload or b""))
-            if samples is None:
-                continue
-            for w in range(0, len(samples), WAV_WIN):
-                win = samples[w : w + WAV_WIN]
-                out.append(
-                    (
-                        doc_id,
-                        w // WAV_WIN,
-                        len(win),
-                        int((win * win).sum()),
-                        int(win.max()),
-                        int(win.min()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "window_no",
-                "n_samples",
-                "sum_sq",
-                "peak",
-                "trough",
-            ],
+    samples = _parse_wav(blob)
+    if samples is None:
+        return None
+    rows = []
+    for w in range(0, len(samples), WAV_WIN):
+        win = samples[w : w + WAV_WIN]
+        rows.append(
+            (
+                doc_id,
+                w // WAV_WIN,
+                len(win),
+                int((win * win).sum()),
+                int(win.max()),
+                int(win.min()),
+            )
         )
+    return rows
 
 
 def wav_window_stats(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real WAV decode: one row per 64-sample analysis
     window per blob, exact integer features."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        wav_window_batch, schema=WAV_WINDOW_SCHEMA
-    )
+    return _blob_udf(_wav_windows, WAV_WINDOW_SCHEMA)(with_payload)
 
 
 # --- REAL compressed-audio decode: IMA-ADPCM (WAV format tag 0x11) -------
@@ -960,7 +886,7 @@ def wav_window_stats(with_payload: DataFrame) -> DataFrame:
 # codec with a closed-form integer decoder (step/index tables are public
 # in the IMA "Recommended Practices for Enhancing Digital Audio
 # Compatibility" spec and multiple RFCs). Only perceptual codecs
-# (MP3/AAC, H.264) remain behind fake_decode_batch.
+# (MP3/AAC, H.264) remain behind _fake_decode.
 #
 # Exact-oracle construction (the JPEG/WAV trick adapted to a recurrence):
 # the step-INDEX trajectory depends only on the nibble stream, never on
@@ -1129,46 +1055,37 @@ def _parse_adpcm_wav(b: bytes):
     return np.asarray(out, dtype=np.int64)
 
 
-def adpcm_stats_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _sample_stats(doc_id, s):
+    """One exact-integer stats row (count / sum / last / peak / trough)
+    from a decoded sample array; ``None`` (the errors-as-data row) when
+    the parse failed or decoded no samples."""
+    if s is None or not s.size:
+        return None
+    return [
+        (
+            doc_id,
+            int(s.size),
+            int(s.sum()),
+            int(s[-1]),
+            int(s.max()),
+            int(s.min()),
+            True,
+        )
+    ]
+
+
+def _adpcm_stats(doc_id, blob: bytes):
     """REAL COMPRESSED-AUDIO DECODE: full IMA-ADPCM nibble decode per
     blob, reduced to exact integer stats (count / sum / last / peak /
     trough) — the loudness-and-clipping screen over a compressed audio
     lake. Malformed payloads return ok=False with null stats (errors as
     data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            s = _parse_adpcm_wav(bytes(payload or b""))
-            if s is None or not s.size:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            out.append(
-                (
-                    doc_id,
-                    int(s.size),
-                    int(s.sum()),
-                    int(s[-1]),
-                    int(s.max()),
-                    int(s.min()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "n_samples", "sum_s", "last_s", "peak", "trough",
-                "ok",
-            ],
-        )
+    return _sample_stats(doc_id, _parse_adpcm_wav(blob))
 
 
 def decode_adpcm(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched IMA-ADPCM decode: per-blob exact integer stats."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        adpcm_stats_batch, schema=ADPCM_DECODE_SCHEMA
-    )
+    return _blob_udf(_adpcm_stats, ADPCM_DECODE_SCHEMA)(with_payload)
 
 
 # --- REAL companded-audio decode: G.711 mu-law (WAV format tag 7) --------
@@ -1287,44 +1204,16 @@ def _parse_mulaw_wav(b: bytes):
     return samples
 
 
-def mulaw_stats_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _mulaw_stats(doc_id, blob: bytes):
     """REAL COMPANDED-AUDIO DECODE: per-blob mu-law expansion reduced to
     exact integer stats (count / sum / last / peak / trough). Malformed
     payloads return ok=False with null stats (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            s = _parse_mulaw_wav(bytes(payload or b""))
-            if s is None or not s.size:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            out.append(
-                (
-                    doc_id,
-                    int(s.size),
-                    int(s.sum()),
-                    int(s[-1]),
-                    int(s.max()),
-                    int(s.min()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "n_samples", "sum_s", "last_s", "peak", "trough",
-                "ok",
-            ],
-        )
+    return _sample_stats(doc_id, _parse_mulaw_wav(blob))
 
 
 def decode_mulaw(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched G.711 mu-law decode: per-blob exact integer stats."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        mulaw_stats_batch, schema=MULAW_DECODE_SCHEMA
-    )
+    return _blob_udf(_mulaw_stats, MULAW_DECODE_SCHEMA)(with_payload)
 
 
 # --- REAL video-container decode: AVI (RIFF-AVI walk + DIB frames) -------
@@ -1485,46 +1374,36 @@ def _parse_avi(b: bytes):
     return w, h, out
 
 
-def avi_frame_sample_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _avi_sampled_frames(doc_id, blob: bytes):
     """REAL VIDEO-CONTAINER FRAME SAMPLING: parse the AVI, keep every
     AVI_SAMPLE_EVERY-th frame, reduce each kept frame to exact integer
     channel sums + the TOP image row's intensity (flip-sensitive, so the
     bottom-up DIB unflip is load-bearing). Malformed payloads yield no
     rows."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_avi(bytes(payload or b""))
-            if parsed is None:
-                continue
-            _, _, frames = parsed
-            for f, img in enumerate(frames):
-                if f % AVI_SAMPLE_EVERY:
-                    continue
-                out.append(
-                    (
-                        doc_id,
-                        f,
-                        int(img[..., 2].sum()),  # DIB stores BGR
-                        int(img[..., 1].sum()),
-                        int(img[..., 0].sum()),
-                        int(img[0].sum()),  # top image row
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "frame_no", "sum_r", "sum_g", "sum_b", "top_row_sum"],
+    parsed = _parse_avi(blob)
+    if parsed is None:
+        return None
+    _, _, frames = parsed
+    rows = []
+    for f in range(0, len(frames), AVI_SAMPLE_EVERY):
+        img = frames[f]
+        rows.append(
+            (
+                doc_id,
+                f,
+                int(img[..., 2].sum()),  # DIB stores BGR
+                int(img[..., 1].sum()),
+                int(img[..., 0].sum()),
+                int(img[0].sum()),  # top image row
+            )
         )
+    return rows
 
 
 def avi_frame_sample(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real AVI frame sampling: one stats row per kept
     frame per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        avi_frame_sample_batch, schema=AVI_FRAME_SCHEMA
-    )
+    return _blob_udf(_avi_sampled_frames, AVI_FRAME_SCHEMA)(with_payload)
 
 
 # --- REAL baseline-JPEG decode (lossy-codec container: custom canonical
@@ -2110,7 +1989,7 @@ def _parse_jpeg(b: bytes):
     return w, h, np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.int64)
 
 
-def jpeg_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_stats(doc_id, blob: bytes):
     """REAL LOSSY-CODEC PIXEL DECODE: full baseline JPEG entropy decode
     (canonical Huffman, unstuffing, RST) + dequant + IDCT, reduced to
     exact integer stats. sum_left sums the LEFT HALF of every 8-wide
@@ -2121,75 +2000,52 @@ def jpeg_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     payloads return ok=False with null stats (errors as data)."""
     import numpy as np
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_jpeg(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            left = np.arange(w) % 8 < 4
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img.sum()),
-                    int(img[:, left].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_px", "sum_left", "ok"],
-        )
+    parsed = _parse_jpeg(blob)
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    left = np.arange(w) % 8 < 4
+    return [(doc_id, w, h, int(img.sum()), int(img[:, left].sum()), True)]
 
 
 def decode_jpeg(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real baseline-JPEG decode: dims + exact pixel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        jpeg_decode_batch, schema=JPEG_DECODE_SCHEMA
-    )
+    return _blob_udf(_jpeg_stats, JPEG_DECODE_SCHEMA)(with_payload)
 
 
 JPEG_RESIZE_SCHEMA = "doc_id long, x long, y long, px long"
 
 
-def jpeg_resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_thumbnail(doc_id, blob: bytes):
     """Full lossy decode + floor-convention nearest-neighbor thumbnail in
     ONE Arrow pass — the vision-preprocessor front over a COMPRESSED
     format: native-resolution pixels never leave the UDF, only the
     RESIZE_W x RESIZE_H thumbnail rows do (the same posture as
-    bmp_resize_batch, now behind a real entropy decode). Malformed
+    _bmp_thumbnail, now behind a real entropy decode). Malformed
     payloads yield no rows."""
     import numpy as np
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_jpeg(bytes(payload or b""))
-            if parsed is None:
-                continue
-            w, h, img = parsed
-            xs = (np.arange(RESIZE_W) * w) // RESIZE_W
-            ys = (np.arange(RESIZE_H) * h) // RESIZE_H
-            small = img[np.ix_(ys, xs)]
-            # grayscale: the pixel; color: channel sum (one long either
-            # way — schema-stable across component counts)
-            if small.ndim == 3:
-                small = small.sum(axis=2)
-            for y in range(RESIZE_H):
-                for x in range(RESIZE_W):
-                    out.append((doc_id, x, y, int(small[y, x])))
-        yield pd.DataFrame(out, columns=["doc_id", "x", "y", "px"])
+    parsed = _parse_jpeg(blob)
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    xs = (np.arange(RESIZE_W) * w) // RESIZE_W
+    ys = (np.arange(RESIZE_H) * h) // RESIZE_H
+    small = img[np.ix_(ys, xs)]
+    # grayscale: the pixel; color: channel sum (one long either
+    # way — schema-stable across component counts)
+    if small.ndim == 3:
+        small = small.sum(axis=2)
+    return [
+        (doc_id, x, y, int(small[y, x]))
+        for y in range(RESIZE_H)
+        for x in range(RESIZE_W)
+    ]
 
 
 def resize_jpeg(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched JPEG decode + thumbnail: one row per output pixel."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        jpeg_resize_batch, schema=JPEG_RESIZE_SCHEMA
-    )
+    return _blob_udf(_jpeg_thumbnail, JPEG_RESIZE_SCHEMA)(with_payload)
 
 
 # --- REAL compressed-image decode: GIF (LZW entropy coding) --------------
@@ -2449,52 +2305,37 @@ def _parse_gif(b: bytes):
     return None
 
 
-def gif_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _gif_stats(doc_id, blob: bytes):
     """REAL LZW IMAGE DECODE: per blob, walk the GIF container, LZW-decode
     the pixel indices, deinterlace, map through the color table, and
     reduce to exact integer channel sums + display-row-1's intensity
     (the deinterlace witness — see make_gif_payload). Malformed payloads
     return ok=False with null stats (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_gif(bytes(payload or b""))
-            if parsed is None:
-                out.append(
-                    (doc_id, None, None, None, None, None, None, None, False)
-                )
-                continue
-            w, h, img, pal = parsed
-            rgb = pal[img]  # (h, w, 3) in display order
-            row1 = int(rgb[1].sum()) if h > 1 else 0
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    w * h,
-                    int(rgb[..., 0].sum()),
-                    int(rgb[..., 1].sum()),
-                    int(rgb[..., 2].sum()),
-                    row1,
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "width", "height", "n_pixels", "sum_r", "sum_g",
-                "sum_b", "row1_sum", "ok",
-            ],
+    parsed = _parse_gif(blob)
+    if parsed is None:
+        return None
+    w, h, img, pal = parsed
+    rgb = pal[img]  # (h, w, 3) in display order
+    row1 = int(rgb[1].sum()) if h > 1 else 0
+    return [
+        (
+            doc_id,
+            w,
+            h,
+            w * h,
+            int(rgb[..., 0].sum()),
+            int(rgb[..., 1].sum()),
+            int(rgb[..., 2].sum()),
+            row1,
+            True,
         )
+    ]
 
 
 def decode_gif(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched real GIF/LZW decode: dims + exact channel sums +
     the deinterlace-witness row-1 intensity."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        gif_decode_batch, schema=GIF_DECODE_SCHEMA
-    )
+    return _blob_udf(_gif_stats, GIF_DECODE_SCHEMA)(with_payload)
 
 
 # --- Heterogeneous media lake: magic-byte dispatch over mixed blobs ------
@@ -2502,9 +2343,63 @@ def decode_gif(with_payload: DataFrame) -> DataFrame:
 DISPATCH_SCHEMA = "doc_id long, kind string, n_units long, checksum long"
 
 
-def dispatch_decode_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _nonempty(parse):
+    """A sample parser that reports an empty decode as a failure, so the
+    next RIFF/WAVE entry gets the blob (ADPCM and mu-law only claim a
+    blob that yields at least one sample; PCM claims any valid one)."""
+
+    def parse_nonempty(b: bytes):
+        samples = parse(b)
+        return samples if samples is not None and samples.size else None
+
+    return parse_nonempty
+
+
+def _riff(form: bytes):
+    return lambda b: b[:4] == b"RIFF" and b[8:12] == form
+
+
+def _area(parsed) -> int:
+    return parsed[0] * parsed[1]
+
+
+def _pixel_sum(parsed) -> int:
+    return int(parsed[2].sum())
+
+
+def _pcm_sum(samples) -> int:
+    return int((samples + 32768).sum())  # unsigned view
+
+
+# Ordered (sniff, kind, parse, n_units, checksum) entries. The first
+# entry whose magic-byte sniff matches and whose parse succeeds names the
+# blob. Sniffs are disjoint except RIFF/WAVE, whose three entries keep the
+# fmt-tag fall-through order PCM -> ADPCM -> mu-law.
+_DISPATCH_FORMATS = (
+    (lambda b: b[:2] == BMP_MAGIC, "bmp", _parse_bmp, _area, _pixel_sum),
+    (lambda b: b[:8] == PNG_SIG, "png", _parse_png, _area, _pixel_sum),
+    (lambda b: b[:2] == JPEG_SOI, "jpeg", _parse_jpeg, _area, _pixel_sum),
+    (
+        lambda b: b[:4] == b"GIF8",
+        "gif",
+        _parse_gif,
+        _area,
+        lambda p: int(p[3][p[2]].sum()),  # palette-mapped RGB
+    ),
+    (_riff(b"WAVE"), "wav", _parse_wav, len, _pcm_sum),
+    (_riff(b"WAVE"), "adpcm", _nonempty(_parse_adpcm_wav), len, _pcm_sum),
+    (_riff(b"WAVE"), "mulaw", _nonempty(_parse_mulaw_wav), len, _pcm_sum),
+    (
+        _riff(b"AVI "),
+        "avi",
+        _parse_avi,
+        lambda p: len(p[2]),
+        lambda p: int(sum(f.sum() for f in p[2])),
+    ),
+)
+
+
+def _dispatch_row(doc_id, blob: bytes):
     """ONE decoder pass over a MIXED media column: sniff the container by
     magic bytes (the only honest router for a heterogeneous lake — file
     extensions don't survive object stores) and dispatch to the real
@@ -2514,63 +2409,18 @@ def dispatch_decode_batch(
     an exact integer checksum of every decoded value, so the value hash
     covers all eight decode paths at once. Unrecognized/corrupt blobs
     become kind='unknown' rows (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload or b"")
-            kind, n_units, checksum = "unknown", None, None
-            if b[:2] == BMP_MAGIC:
-                parsed = _parse_bmp(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "bmp", w * h, int(img.sum())
-            elif b[:8] == PNG_SIG:
-                parsed = _parse_png(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "png", w * h, int(img.sum())
-            elif b[:2] == JPEG_SOI:
-                parsed = _parse_jpeg(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "jpeg", w * h, int(img.sum())
-            elif b[:4] == b"GIF8":
-                parsed = _parse_gif(b)
-                if parsed is not None:
-                    w, h, img, pal = parsed
-                    kind, n_units = "gif", w * h
-                    checksum = int(pal[img].sum())
-            elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                samples = _parse_wav(b)
-                if samples is not None:
-                    kind = "wav"
-                    n_units = len(samples)
-                    checksum = int((samples + 32768).sum())  # unsigned view
-                else:
-                    samples = _parse_adpcm_wav(b)
-                    if samples is not None and samples.size:
-                        kind = "adpcm"
-                        n_units = len(samples)
-                        checksum = int((samples + 32768).sum())
-                    else:
-                        samples = _parse_mulaw_wav(b)
-                        if samples is not None and samples.size:
-                            kind = "mulaw"
-                            n_units = len(samples)
-                            checksum = int((samples + 32768).sum())
-            elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                parsed = _parse_avi(b)
-                if parsed is not None:
-                    _, _, frames = parsed
-                    kind = "avi"
-                    n_units = len(frames)
-                    checksum = int(sum(f.sum() for f in frames))
-            out.append((doc_id, kind, n_units, checksum))
-        yield pd.DataFrame(out, columns=["doc_id", "kind", "n_units", "checksum"])
+    for sniff, kind, parse, n_units, checksum in _DISPATCH_FORMATS:
+        if sniff(blob):
+            parsed = parse(blob)
+            if parsed is not None:
+                return [(doc_id, kind, n_units(parsed), checksum(parsed))]
+    return [(doc_id, "unknown", None, None)]
 
 
 def dispatch_decode(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched mixed-container decode: one stats row per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        dispatch_decode_batch, schema=DISPATCH_SCHEMA
-    )
+    return _blob_udf(_dispatch_row, DISPATCH_SCHEMA)(with_payload)
+
+
+# The dispatcher's raw pandas generator, for driving it without Spark.
+dispatch_decode_batch = _blob_udf(_dispatch_row, DISPATCH_SCHEMA).batch

@@ -62,6 +62,7 @@ class CorpusReleaseResult:
     manifest: dict  # per-stage counts (filled after an action runs)
     observations: dict  # name -> Observation (driver reads post-action)
     cached: list = field(default_factory=list)  # persisted stage frames
+    stages: dict = field(default_factory=dict)  # name -> observed stage frame
 
     def close(self) -> None:
         """Unpersist the stage-boundary caches (idempotent)."""
@@ -255,17 +256,41 @@ def build_release(
     )
     released = decon.withColumn("split", split)
     _LIVE_STAGES.extend(cached)
-    return CorpusReleaseResult(
-        released=released, manifest={}, observations=obs, cached=cached
+    stages = dict(
+        input=staged, ruled=ruled, exact=exact, neardup=neardup, decon=decon
     )
+    return CorpusReleaseResult(
+        released=released,
+        manifest={},
+        observations=obs,
+        cached=cached,
+        stages=stages,
+    )
+
+
+def _stage_count(obs: Observation, stage: DataFrame) -> int:
+    """The row count ``obs`` recorded on ``stage``. When AQE folds a plan
+    to an empty relation (no document passes the cleaning rules), the
+    CollectMetrics nodes under the fold leave the executed plan and their
+    observations hold an empty metrics row, which ``Observation.get``
+    cannot convert. Only then is the stage counted directly, so a
+    non-empty release still reads every counter from its one write job."""
+    if obs._jo.getRow().length():
+        return obs.get["n"]
+    return stage.count()
 
 
 def write_release(result: CorpusReleaseResult, out_dir: str) -> dict:
     """Write partitioned by split, then read every stage counter from its
     Observation (ONE job, no per-counter rescans) into the manifest, then
-    release the stage-boundary caches (r6 ADVICE: no leaked persists)."""
+    release the stage-boundary caches (r6 ADVICE: no leaked persists).
+    A corpus where nothing survives writes an empty release and a
+    manifest whose post-rules counts are zero."""
     result.released.write.mode("overwrite").partitionBy("split").parquet(out_dir)
-    manifest = {name: o.get["n"] for name, o in result.observations.items()}
+    manifest = {
+        name: _stage_count(o, result.stages[name])
+        for name, o in result.observations.items()
+    }
     manifest["released"] = manifest["decon"]
     result.manifest.update(manifest)
     result.close()

@@ -3245,6 +3245,12 @@ def dedup_soft_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression — the extra cost over keep-one is a component-keyed count
     plus one join.
 
+    Assumes ``documents.doc_id`` is unique. Cluster sizes are counted on
+    the component map, which holds each node once; the oracle counts
+    corpus rows per component. The two agree only while every doc_id
+    names one document — a duplicated doc_id would make the map
+    undercount its cluster relative to the oracle.
+
     Scale posture: the corpus-sized side is touched by exactly ONE left
     join — against the size-enriched component map; no forced broadcast
     — on real web corpora the component map is billions of rows, AQE

@@ -19,12 +19,11 @@ from __future__ import annotations
 
 # NOTE: Spark 4's successor API (``transformWithStateInPandas`` — ValueState/
 # ListState/MapState + timers) is present in this PySpark build but its
-# state-server protocol requires ``google.protobuf``, which this container
-# does not ship (re-verified r9: the driver worker crashes with ImportError
-# on protobuf descriptor import). ``stateful_v2.py`` carries the ported
-# operators behind a ``tws_available()`` gate — same arithmetic, same
-# batch-parity oracles, exercised by tests the moment protobuf appears;
-# ``applyInPandasWithState`` below is the runnable surface here.
+# state-server protocol requires the ``google.protobuf`` runtime, which the
+# supported environment does not ship (the driver worker crashes with
+# ImportError on protobuf descriptor import). A port that could never run
+# here was removed rather than kept behind a gate; ``applyInPandasWithState``
+# below is the one stateful surface, and the queries call it directly.
 
 import atexit
 import os

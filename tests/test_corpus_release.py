@@ -84,3 +84,45 @@ def test_release_contains_no_exact_duplicates_or_eval_overlap(spark, sf_dir, tmp
         .cast("long") % 100
     )
     assert rel.filter(bucket >= 98).count() == 0
+
+
+def test_release_with_no_rule_survivors_writes_empty_release(spark, tmp_path):
+    """A corpus where no document passes the cleaning rules (200 docs
+    without a single stopword) still writes a release: AQE folds the
+    empty stages away together with their observe nodes, and the manifest
+    must count those stages instead of failing on the missing metrics."""
+    import pandas as pd
+
+    from ntd_gtfs_to_socrata_spark.operators.textops import STOPWORDS
+
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf"]
+    texts = [
+        " ".join(f"{words[(i + j) % len(words)]}{(7 * i + j) % 50}" for j in range(60))
+        for i in range(200)
+    ]
+    assert not {t for text in texts for t in text.split()} & set(STOPWORDS)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame(
+        {
+            "doc_id": range(200),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(sf / "documents.parquet")
+
+    res = build_release(spark, str(sf))
+    out = str(tmp_path / "release")
+    manifest = write_release(res, out)
+    assert manifest == {
+        "input": 200,
+        "ruled": 0,
+        "exact": 0,
+        "neardup": 0,
+        "decon": 0,
+        "released": 0,
+    }
+    assert res.cached == []
+    assert spark.read.schema(res.released.schema).parquet(out).count() == 0

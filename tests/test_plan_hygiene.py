@@ -315,3 +315,39 @@ def test_dedup_verdict_joins_unhinted(spark, sf_dir, name):
         assert "node" in logical
     else:
         assert not has_broadcast_hint(logical), f"{name} carries a forced broadcast hint"
+
+
+def test_multimodal_has_one_blob_adapter():
+    """Regrowth guard, no Spark needed: operators/multimodal.py builds
+    every decoder through ``_blob_udf`` — exactly one ``mapInPandas``
+    call in the module and no hand-written ``*_batch`` generator outside
+    the adapter."""
+    import ast
+    import inspect
+
+    from ntd_gtfs_to_socrata_spark.operators import multimodal as MM
+
+    tree = ast.parse(inspect.getsource(MM))
+    map_calls = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    ]
+    assert len(map_calls) == 1
+    (adapter,) = [
+        node
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name == "_blob_udf"
+    ]
+    inside = set(ast.walk(adapter))
+    assert map_calls[0] in inside
+    strays = [
+        node.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+        and node.name.endswith("_batch")
+        and node not in inside
+    ]
+    assert strays == []
